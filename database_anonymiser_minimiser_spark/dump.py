@@ -9,9 +9,13 @@ buffered writer, one table at a time (exporter.go:72-80).
 Here the hot path — per-value SQL-literal formatting + escaping + row
 tuple assembly — is built from JVM column expressions (replace/concat/
 date_format), so a 100 TB table formats inside WholeStageCodegen across
-all executors; Python only assembles the ordered file from per-table
-iterators (header -> tables in FK-topo order -> footer), streaming via
-``toLocalIterator`` so the driver never materialises a table.
+all executors. Each table becomes ONE ordered stream of tuple strings
+(``ordered_tuples``: a single range exchange when a primary key orders
+it, none otherwise) read with ``toLocalIterator``, so the driver never
+materialises a table. The driver cuts that stream into INSERTs of
+``batch_size`` consecutive tuples as it arrives, as the reference's row
+loop does, and writes the file: header -> tables in FK-topo order ->
+footer.
 
 Output format parity (checked by tests against reference-derived goldens):
 - escaping: backslash doubling first, then ``'``->``''``, NUL->``\\0``,
@@ -20,7 +24,8 @@ Output format parity (checked by tests against reference-derived goldens):
   strings+timestamps escaped-quoted, timestamps as
   ``YYYY-MM-DD HH:MM:SS`` (exporter.go:312-336),
 - statements: ``INSERT INTO `t` (`c1`, `c2`) VALUES\\n(v, v),\\n(v, v);``
-  batches of <=1000 rows (exporter.go:273-306),
+  batches of exactly 1000 rows, only a table's last one shorter, in key
+  order when a key is given (exporter.go:273-306),
 - headers/footers + DROP TABLE per dialect (exporter.go:91-166, 259-271).
 
 Scale note: a single ordered text file is inherently a sequential sink —
@@ -33,13 +38,13 @@ from __future__ import annotations
 
 import time
 from dataclasses import dataclass, field
+from itertools import islice
 from pathlib import Path
-from typing import IO, Iterator
+from typing import IO, Iterable, Iterator
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.window import Window
 
 DEFAULT_BATCH_SIZE = 1000  # rows per multi-row INSERT (exporter.go:16-17)
 
@@ -184,91 +189,36 @@ def quote_ident(db_type: str, ident: str) -> str:
     return '"' + ident.replace('"', '""') + '"'
 
 
+def ordered_tuples(df: DataFrame, order_by: str | None = None) -> DataFrame:
+    """One ``t`` column of row tuples, in primary-key order when
+    ``order_by`` is given (one range exchange) and in source order
+    otherwise (no exchange at all)."""
+    if order_by:
+        df = df.orderBy(F.col(f"`{order_by}`"))
+    return df.select(row_tuple_column(df).alias("t"))
+
+
 def insert_statements(
     df: DataFrame,
     table: str,
     order_by: str | None = None,
     batch_size: int = DEFAULT_BATCH_SIZE,
     db_type: str = "mysql",
-) -> DataFrame:
-    """DataFrame of one ``stmt`` string column: multi-row INSERTs of
-    ``batch_size`` rows (exporter.go:273-306).
+) -> Iterator[str]:
+    """Multi-row INSERTs of ``batch_size`` consecutive rows
+    (exporter.go:273-306), streamed from ``ordered_tuples``.
 
-    Tuple formatting is distributed; only batching into numbered groups
-    needs a global row order. With ``order_by`` (pk) the order is
-    deterministic; without, source order is preserved like the reference
-    (which is likewise order-nondeterministic, mysql.go:163-166).
-    """
+    Tuples are formatted by the executors; the driver cuts the ordered
+    stream into batches as it arrives, like the reference's row loop, so
+    every INSERT but the table's last has exactly ``batch_size`` rows
+    and key order holds across the whole table. Without ``order_by`` the
+    source order is kept, which the reference does not fix either
+    (mysql.go:163-166)."""
     cols = ", ".join(quote_ident(db_type, c) for c in df.columns)
     head = f"INSERT INTO {quote_ident(db_type, table)} ({cols}) VALUES\n"
-    tuples = df.select(
-        row_tuple_column(df).alias("t"),
-        (F.col(f"`{order_by}`") if order_by else F.monotonically_increasing_id()).alias("_ord"),
-    )
-
-    # Global contiguous row index WITHOUT a single-partition window (a
-    # Window.orderBy with no partitionBy funnels every tuple through one
-    # task — spills/OOMs on large tables). Instead, the distributed
-    # zipWithIndex shape, all in DataFrame ops:
-    #   1. range-partition on _ord (distributed sort into ordered ranges;
-    #      RangePartitioner's sampling is deterministically seeded, so the
-    #      count job and the final job see identical boundaries),
-    #   2. per-partition counts -> cumulative offsets (a metadata-sized
-    #      collect: one row per partition, like AQE stats),
-    #   3. index = partition offset + intra-partition row_number, where
-    #      the window now parallelises across partitions.
-    n_part = max(1, tuples.rdd.getNumPartitions())
-    if n_part == 1:
-        # single-split input (the tiny-table case): a global order is a
-        # partition-local sort, so skip the range sampler AND the
-        # per-partition count collect — two whole Spark jobs of fixed
-        # overhead PER TABLE, which dominate a many-small-tables catalog
-        # export (tools/bench_catalog.py: ~1 s/table before this path).
-        # The empty-window Exchange SinglePartition is a no-op here:
-        # the input already IS one partition.
-        w = Window.partitionBy(F.lit(0)).orderBy("_ord")
-        idx = F.row_number().over(w) - F.lit(1)
-        batched = tuples.select(
-            "t",
-            idx.alias("_idx"),
-            F.floor(idx / F.lit(batch_size)).alias("_batch"),
-        )
-    else:
-        ranged = tuples.repartitionByRange(n_part, F.col("_ord")).withColumn(
-            "_pid", F.spark_partition_id()
-        )
-        counts = (
-            ranged.groupBy("_pid").agg(F.count(F.lit(1)).alias("_n")).collect()
-        )
-        offsets, acc = [], 0
-        for r in sorted(counts, key=lambda r: r["_pid"]):
-            offsets.append((r["_pid"], acc))
-            acc += r["_n"]
-        if not offsets:
-            offsets = [(0, 0)]
-        off_df = df.sparkSession.createDataFrame(offsets, "_pid int, _off long")
-        w = Window.partitionBy("_pid").orderBy("_ord")
-        idx = F.col("_off") + F.row_number().over(w) - F.lit(1)
-        batched = ranged.join(F.broadcast(off_df), "_pid").select(
-            "t",
-            idx.alias("_idx"),
-            F.floor(idx / F.lit(batch_size)).alias("_batch"),
-        )
-    # collect_list order is not guaranteed after the groupBy shuffle;
-    # sort each batch's <=batch_size tuples by their global index
-    batch_body = F.concat_ws(
-        ",\n",
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("_idx", "t"))),
-            lambda s: s["t"],
-        ),
-    )
-    return (
-        batched.groupBy("_batch")
-        .agg(batch_body.alias("body"))
-        .orderBy("_batch")
-        .select(F.concat(F.lit(head), F.col("body"), F.lit(";")).alias("stmt"))
-    )
+    rows = (r[0] for r in ordered_tuples(df, order_by).toLocalIterator())
+    while batch := list(islice(rows, batch_size)):
+        yield head + ",\n".join(batch) + ";"
 
 
 # ---------------------------------------------------------------------------
@@ -318,6 +268,17 @@ def drop_table_statement(db_type: str, table: str) -> str:
     return f"DROP TABLE IF EXISTS {quoted};"
 
 
+def table_preamble(db_type: str, name: str, ddl: str) -> str:
+    """Section banner, DROP TABLE and DDL that open a table's section."""
+    return (
+        f"\n--\n-- Table: {name}\n--\n\n"
+        + drop_table_statement(db_type, name)
+        + "\n"
+        + ddl.rstrip("\n")
+        + "\n\n"
+    )
+
+
 # ---------------------------------------------------------------------------
 # Full export orchestration
 # ---------------------------------------------------------------------------
@@ -333,10 +294,22 @@ class ExportStats:
     per_table_rows: dict[str, int] = field(default_factory=dict)
 
 
+def write_inserts(out: IO[str], stmts: Iterable[str]) -> int:
+    """Write INSERTs one per line; returns the rows written. Each tuple
+    sits on its own line starting "(" (data newlines are escaped to a
+    literal \\n), so counting those avoids a ``count()`` that would run
+    the whole plan again."""
+    rows = 0
+    for stmt in stmts:
+        out.write(stmt + "\n")
+        rows += stmt.count("\n(")
+    return rows
+
+
 def write_dump(
     out: IO[str],
     db_type: str,
-    tables: Iterator[tuple[str, str, DataFrame | None, str | None]],
+    tables: Iterable[tuple[str, str, DataFrame | None, str | None]],
 ) -> ExportStats:
     """Stream an ordered dump: header -> per-table sections -> footer.
 
@@ -347,20 +320,13 @@ def write_dump(
     stats = ExportStats()
     out.write(header_text(db_type))
     for name, ddl, df, order_by in tables:
-        out.write(f"\n--\n-- Table: {name}\n--\n\n")
-        out.write(drop_table_statement(db_type, name) + "\n")
-        out.write(ddl.rstrip("\n") + "\n\n")
+        out.write(table_preamble(db_type, name, ddl))
         if df is None:
             stats.tables_truncated += 1
             continue
-        stmts = insert_statements(df, name, order_by=order_by, db_type=db_type)
-        n = 0
-        for row in stmts.toLocalIterator():  # streamed; never collected whole
-            out.write(row["stmt"] + "\n")
-            # each tuple sits on its own line starting "(" (embedded
-            # newlines in data are escaped to literal \n) — counting them
-            # avoids a df.count() that would RE-RUN the whole plan
-            n += row["stmt"].count("\n(")
+        n = write_inserts(
+            out, insert_statements(df, name, order_by=order_by, db_type=db_type)
+        )
         stats.rows_exported += n
         stats.per_table_rows[name] = n
         stats.tables_exported += 1
@@ -374,62 +340,49 @@ def write_dump_parallel(
     tables: list[tuple[str, str, DataFrame | None, str | None]],
     max_workers: int = 8,
 ) -> ExportStats:
-    """Parallel variant of ``write_dump``: per-table INSERT formatting
-    runs as CONCURRENT Spark jobs (the reference is strictly sequential,
+    """Parallel variant of ``write_dump``: tables are formatted as
+    CONCURRENT Spark jobs (the reference is strictly sequential,
     exporter.go:72-80 — tables are independent, so only the sink COMMIT
     order needs the FK topo sort, SURVEY §3.1).
 
-    Each table's statements land in a spool file via ``df.write.text``
-    (distributed write, no driver materialisation); the driver then
-    streams the spools into the dump in topo order. Spark's scheduler
-    interleaves the jobs across the cluster — small tables no longer
-    serialise behind large ones.
-
-    ``max_workers`` saturates around 8 on a many-small-tables catalog
-    (tools/bench_catalog.py, 40 x 200-row tables, local[32]: 18.1 s at
-    4 workers, 14.8 s at 8, 15.9 s at 16 — the limit is driver-side
-    job submission, not executor slots).
+    Each pool thread drains its table's ``insert_statements`` into a
+    spool file on the driver; the main thread copies the spools into the
+    dump in topo order, so the output is the serial dump's, byte for
+    byte, wherever the row order is fixed by a unique key. Spark's
+    scheduler interleaves the jobs — small tables no longer serialise
+    behind large ones. ``max_workers`` bounds the tables in flight.
     """
     import shutil
     import tempfile
     from concurrent.futures import ThreadPoolExecutor
 
-    stats = ExportStats()
-    spool_root = tempfile.mkdtemp(prefix="dbmask_dump_")
-
-    def format_table(idx: int, name: str, df: DataFrame, order_by: str | None):
-        path = f"{spool_root}/{idx:04d}_{name}"
+    def spool_table(name: str, df: DataFrame, order_by: str | None):
+        spool = tempfile.TemporaryFile("w+", encoding="utf-8")
         stmts = insert_statements(df, name, order_by=order_by, db_type=db_type)
-        stmts.coalesce(1).write.mode("overwrite").text(path)
-        return path
+        rows = write_inserts(spool, stmts)
+        spool.seek(0)
+        return spool, rows
 
-    jobs: dict[str, object] = {}
+    stats = ExportStats()
     with ThreadPoolExecutor(max_workers=max_workers) as pool:
-        for i, (name, _ddl, df, order_by) in enumerate(tables):
-            if df is not None:
-                jobs[name] = pool.submit(format_table, i, name, df, order_by)
-
+        jobs = {
+            name: pool.submit(spool_table, name, df, order_by)
+            for name, _ddl, df, order_by in tables
+            if df is not None
+        }
         out.write(header_text(db_type))
         for name, ddl, df, _order_by in tables:
-            out.write(f"\n--\n-- Table: {name}\n--\n\n")
-            out.write(drop_table_statement(db_type, name) + "\n")
-            out.write(ddl.rstrip("\n") + "\n\n")
+            out.write(table_preamble(db_type, name, ddl))
             if df is None:
                 stats.tables_truncated += 1
                 continue
-            spool = jobs[name].result()  # wait only for THIS table
-            rows = 0
-            for part in sorted(Path(spool).glob("part-*")):
-                with open(part) as f:
-                    for line in f:
-                        out.write(line)
-                        if line.startswith("("):  # one tuple per line
-                            rows += 1
+            spool, rows = jobs[name].result()  # wait only for THIS table
+            with spool:
+                shutil.copyfileobj(spool, out)
             stats.rows_exported += rows
             stats.per_table_rows[name] = rows
             stats.tables_exported += 1
         out.write(footer_text(db_type))
-    shutil.rmtree(spool_root, ignore_errors=True)
     return stats
 
 

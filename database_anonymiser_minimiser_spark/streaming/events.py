@@ -437,9 +437,17 @@ def run_streaming_export(
     ingestion-time export: new files landing in the source directory
     become dump increments without re-scanning landed data, and the
     per-batch INSERT formatting is the same distributed JVM path as the
-    batch sink (dump.insert_statements). foreachBatch runs sequentially
-    per trigger, so appends never interleave. Returns rows exported."""
-    from ..dump import footer_text, header_text, insert_statements, quote_ident
+    batch sink (dump.insert_statements). Each micro-batch runs that one
+    plan; its rows are counted as the sink writes them. foreachBatch runs
+    sequentially per trigger, so appends never interleave. Returns rows
+    exported."""
+    from ..dump import (
+        footer_text,
+        header_text,
+        insert_statements,
+        quote_ident,
+        write_inserts,
+    )
     from ..functions.faker_deterministic import FAKER_FUNCTIONS
     from pyspark.sql import functions as F
 
@@ -463,13 +471,11 @@ def run_streaming_export(
     total = {"rows": 0}
 
     def sink(batch_df, epoch_id: int) -> None:
-        total["rows"] += batch_df.count()
         stmts = insert_statements(
             batch_df, "events", order_by="event_id", db_type=db_type
         )
         with open(out_path, "a") as fh:
-            for row in stmts.toLocalIterator():
-                fh.write(row["stmt"] + "\n")
+            total["rows"] += write_inserts(fh, stmts)
 
     q = (
         masked.writeStream.foreachBatch(sink)

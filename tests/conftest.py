@@ -28,14 +28,29 @@ def pytest_collection_modifyitems(config, items):
     gate that still runs — are marked ``slow`` and deselected by
     default (~14 min saved). ``SPARK_GRAFT_FULL_SUITE=1`` runs
     everything; builder closing runs use it (see OPTIMIZATION_r15.md).
-    Explicit ``-m`` on the command line overrides this hook entirely."""
+    Explicit ``-m`` on the command line overrides this hook entirely,
+    and a slow test named by node id (``file.py::test``) always runs."""
     if os.environ.get("SPARK_GRAFT_FULL_SUITE"):
         return
     if config.getoption("-m"):
         return
+    named = set()
+    for arg in config.args:
+        path, sep, rest = arg.partition("::")
+        if sep:
+            rel = os.path.relpath(os.path.abspath(path), config.rootpath)
+            named.add(f"{rel}::{rest}")
+
+    def explicit(item) -> bool:
+        return any(
+            item.nodeid == n or item.nodeid.startswith((n + "::", n + "["))
+            for n in named
+        )
+
     selected, deselected = [], []
     for item in items:
-        (deselected if item.get_closest_marker("slow") else selected).append(item)
+        slow = item.get_closest_marker("slow") and not explicit(item)
+        (deselected if slow else selected).append(item)
     if deselected:
         config.hook.pytest_deselected(items=deselected)
         items[:] = selected

@@ -875,3 +875,29 @@ def test_recursive_cl_diversity_two_aggregations(spark, sf):
     assert "Python" not in plan, plan[:2000]
     assert tree.count(" Exchange (") == 2, tree
     assert "Join" not in tree and "Window" not in tree, tree
+
+
+def test_dump_tuples_unkeyed_keep_source_order(spark, sf):
+    """The SQL dump streams one ordered tuple column per table and cuts
+    INSERTs on the driver: without a primary key the tuples keep source
+    order, so the plan has no Exchange, no Window and no Aggregate."""
+    from database_anonymiser_minimiser_spark.dump import ordered_tuples
+    from database_anonymiser_minimiser_spark.sources.parquet import ParquetSource
+
+    plan = plan_of(ordered_tuples(ParquetSource(spark, sf).read("lineitem")))
+    for node in ("Exchange", "Window", "Aggregate"):
+        assert node not in plan, plan[:3000]
+
+
+def test_dump_tuples_keyed_single_range_exchange(spark, sf):
+    """With a primary key the tuple stream is one distributed sort: exactly
+    one Exchange, range-partitioned on the key, and no Window (no global
+    row index, no per-batch regroup)."""
+    from database_anonymiser_minimiser_spark.dump import ordered_tuples
+    from database_anonymiser_minimiser_spark.sources.parquet import ParquetSource
+
+    df = ordered_tuples(ParquetSource(spark, sf).read("orders"), "o_orderkey")
+    plan = plan_of(df)
+    exchanges = re.findall(r"\(\d+\) Exchange\n.*\nArguments: (\w+)", plan)
+    assert exchanges == ["rangepartitioning"], plan[:3000]
+    assert "Window" not in plan, plan[:3000]
