@@ -216,7 +216,10 @@ def insert_statements(
     (mysql.go:163-166)."""
     cols = ", ".join(quote_ident(db_type, c) for c in df.columns)
     head = f"INSERT INTO {quote_ident(db_type, table)} ({cols}) VALUES\n"
-    rows = (r[0] for r in ordered_tuples(df, order_by).toLocalIterator())
+    # prefetch: the executors compute the next partition while this loop
+    # drains the current one
+    stream = ordered_tuples(df, order_by).toLocalIterator(prefetchPartitions=True)
+    rows = (r[0] for r in stream)
     while batch := list(islice(rows, batch_size)):
         yield head + ",\n".join(batch) + ";"
 
