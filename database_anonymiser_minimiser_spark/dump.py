@@ -359,18 +359,20 @@ def write_dump_parallel(
     import tempfile
     from concurrent.futures import ThreadPoolExecutor
 
-    def spool_table(name: str, df: DataFrame, order_by: str | None):
-        spool = tempfile.TemporaryFile("w+", encoding="utf-8")
+    def spool_table(idx: int, name: str, df: DataFrame, order_by: str | None):
+        path = f"{spool_dir}/{idx:04d}"
         stmts = insert_statements(df, name, order_by=order_by, db_type=db_type)
-        rows = write_inserts(spool, stmts)
-        spool.seek(0)
-        return spool, rows
+        with open(path, "w", encoding="utf-8") as spool:
+            return path, write_inserts(spool, stmts)
 
     stats = ExportStats()
-    with ThreadPoolExecutor(max_workers=max_workers) as pool:
+    with (
+        tempfile.TemporaryDirectory(prefix="dbmask_dump_") as spool_dir,
+        ThreadPoolExecutor(max_workers=max_workers) as pool,
+    ):
         jobs = {
-            name: pool.submit(spool_table, name, df, order_by)
-            for name, _ddl, df, order_by in tables
+            name: pool.submit(spool_table, i, name, df, order_by)
+            for i, (name, _ddl, df, order_by) in enumerate(tables)
             if df is not None
         }
         out.write(header_text(db_type))
@@ -379,8 +381,8 @@ def write_dump_parallel(
             if df is None:
                 stats.tables_truncated += 1
                 continue
-            spool, rows = jobs[name].result()  # wait only for THIS table
-            with spool:
+            path, rows = jobs[name].result()  # wait only for THIS table
+            with open(path, encoding="utf-8") as spool:
                 shutil.copyfileobj(spool, out)
             stats.rows_exported += rows
             stats.per_table_rows[name] = rows
