@@ -61,7 +61,7 @@ def _without_date(text: str) -> list[str]:
 
 
 @pytest.mark.parametrize("order_by", ["k", None], ids=["keyed", "unkeyed"])
-def test_multi_partition_dump_contracts(spark, source, order_by):
+def test_multi_partition_dump_contracts(source, order_by):
     assert source.rdd.getNumPartitions() == 6
     text, stats = _dump(write_dump, source, order_by)
     inserts = _inserts(text)
@@ -81,7 +81,7 @@ def test_multi_partition_dump_contracts(spark, source, order_by):
 
 
 @pytest.mark.parametrize("order_by", ["k", None], ids=["keyed", "unkeyed"])
-def test_multi_partition_serial_equals_parallel(spark, source, order_by):
+def test_multi_partition_serial_equals_parallel(source, order_by):
     serial, s1 = _dump(write_dump, source, order_by)
     parallel, s2 = _dump(write_dump_parallel, source, order_by)
     assert s1.per_table_rows == s2.per_table_rows == {"t": N}
