@@ -82,6 +82,18 @@ def test_ngram_jaccard_exact_values(spark, docs_df):
     assert abs(pairs[(0, 1)] - (n - 3) / (n + 3)) < 1e-12
 
 
+def test_ngram_jaccard_threshold_accepts_non_float(spark, docs_df):
+    """The threshold is interpolated into the candidate SQL, so a
+    non-float numeric (Decimal here; numpy 2's np.float64 reprs the
+    same way) must be coerced, not rendered as ``Decimal('0.5')``."""
+    from decimal import Decimal
+
+    def pairs(t):
+        return sorted(tuple(r) for r in D.ngram_jaccard_pairs(docs_df, threshold=t).collect())
+
+    assert pairs(Decimal("0.5")) == pairs(0.5)
+
+
 def test_ngram_containment_directed_planted(spark):
     """r12: containment catches the short-doc-inside-long-doc case that
     Jaccard misses, and the relation is DIRECTED: the short side scores
@@ -408,6 +420,26 @@ def test_minhash_index_lifecycle_matches_direct_operator(spark, tmp_path):
         ).collect()
     }
     assert got2 == {7: 1.0}
+
+
+def test_incremental_result_survives_index_screen(spark, tmp_path):
+    """A held minhash_lsh_incremental result stays cached after an index
+    screen runs: the two operators persist under separate keys, so the
+    screen cannot release the other caller's result."""
+    landed = spark.createDataFrame(
+        [(100, BASE), (101, "unrelated landed content about engines")],
+        ["doc_id", "text"],
+    )
+    new = spark.createDataFrame(
+        [(0, BASE.replace("jumps", "leaps")), (1, "fresh unseen words entirely")],
+        ["doc_id", "text"],
+    )
+    r1 = D.minhash_lsh_incremental(new, landed)
+    r1.count()
+    idx = str(tmp_path / "mh_index")
+    D.save_minhash_index(landed, idx)
+    D.minhash_incremental_vs_index(new, idx).collect()
+    assert r1.storageLevel.useMemory
 
 
 def test_minhash_index_append_replay_is_idempotent(spark, tmp_path):
@@ -1017,4 +1049,23 @@ def test_repeat_calls_do_not_accumulate_persists(spark, sf_dir):
         Q.QUERIES["events_locf_hourly"](spark, sf_dir).collect()
         # the resample registry keeps at most one member's persist
         assert cm.cachedData().size() - base <= 2  # q20's + one resample
+    spark.catalog.clearCache()
+    base = cm.cachedData().size()
+    for _ in range(2):
+        D.ngram_jaccard_pairs(docs).collect()
+        # shingles and df dictionary: one key each, neither released by
+        # the other's persist within the same call
+        assert cm.cachedData().size() - base == 2
+    spark.catalog.clearCache()
+    base = cm.cachedData().size()
+    for _ in range(2):
+        D.simhash_wide_near_pairs(docs).collect()
+        assert cm.cachedData().size() - base <= 1
+    spark.catalog.clearCache()
+    base = cm.cachedData().size()
+    for _ in range(2):
+        Q.QUERIES["bpe_encode_token_count"](spark, sf_dir).collect()
+        Q.QUERIES["unigram_encode_token_count"](spark, sf_dir).collect()
+        # the tokenizer family shares one key
+        assert cm.cachedData().size() - base <= 1
     spark.catalog.clearCache()
