@@ -25,27 +25,8 @@ import hashlib
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-from pyspark.storagelevel import StorageLevel
 
-# last-call-released persist cap for the bitext candidate relations
-# (r15, the _NGRAM_PERSISTS pattern): the returned DataFrame consumes
-# the persisted candidates lazily, so they cannot be unpersisted inside
-# the call — each call releases the PREVIOUS call's cache instead, so a
-# long-lived session (CLI/notebook) holds at most one invocation's
-# cached relation. unpersist on a stopped session must not kill the new
-# query. The bench clearCache()s anyway; this is session hygiene.
-_BITEXT_PERSISTS: "list[DataFrame]" = []
-
-
-def _bitext_persist(df: DataFrame) -> DataFrame:
-    while _BITEXT_PERSISTS:
-        try:
-            _BITEXT_PERSISTS.pop().unpersist()
-        except Exception:
-            pass
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _BITEXT_PERSISTS.append(df)
-    return df
+from ..persist import cap_persist
 
 
 # ---------------------------------------------------------------------------
@@ -1782,13 +1763,6 @@ def compact_ann_index(spark, path: str, keep_batches: tuple = ()) -> dict:
 # right-to-erasure: tombstones on the persisted ANN index
 # ---------------------------------------------------------------------------
 
-# above this many tombstoned ids the serve-side exclusion switches from a
-# pushed Not(In(nid, ...)) scan filter to a broadcast anti-join — a literal
-# list this long would bloat every query plan, while the anti-join's only
-# Exchange carries the (small) tombstone side
-_TOMBSTONE_ISIN_CAP = 4096
-
-
 def ann_tombstone_ids(spark, path: str) -> "list[int]":
     """The sorted forgotten ids of the ANN index at ``path`` — empty when
     nothing was ever forgotten (or the ledger was cleared by a full
@@ -1898,20 +1872,14 @@ def _ann_without_tombstones(
     zero-index-side-Exchange plan gates hold unchanged), large ones a
     broadcast LEFT ANTI join whose only Exchange carries the tombstones.
     ``invert=True`` returns the HIDDEN rows instead (reporting)."""
+    from .dedup import _without_tombstoned_ids
+
     ts = (
         tombstone_ids
         if tombstone_ids is not None
         else ann_tombstone_ids(spark, path)
     )
-    if not ts:
-        return landed.filter(F.lit(False)) if invert else landed
-    if len(ts) <= _TOMBSTONE_ISIN_CAP:
-        cond = F.col("nid").isin([int(i) for i in ts])
-        return landed.filter(cond if invert else ~cond)
-    sess = landed.sparkSession
-    tsdf = sess.createDataFrame([(int(i),) for i in ts], "nid bigint")
-    how = "left_semi" if invert else "left_anti"
-    return landed.join(F.broadcast(tsdf), "nid", how)
+    return _without_tombstoned_ids(landed, ts, col="nid", invert=invert)
 
 
 def mutual_top1_pairs(
@@ -1962,8 +1930,9 @@ def mutual_top1_pairs(
     # TWICE per call. Post-projection rows are (id, id, cosine) — the
     # float arrays are projected away, so the cached bytes are pair-count
     # x 24B, MEMORY_AND_DISK so big cells spill instead of OOM.
-    cand = _bitext_persist(
-        a.join(b, "cid").select("a_id", "b_id", cos.alias("cosine"))
+    cand = cap_persist(
+        "bitext",
+        a.join(b, "cid").select("a_id", "b_id", cos.alias("cosine")),
     )
     w_a = Window.partitionBy("a_id").orderBy(
         F.col("cosine").desc(), F.col("b_id")
@@ -2042,8 +2011,9 @@ def bitext_margin_pairs(
     # cosine) rows (arrays projected away before the cache). The
     # mutuality check is a key join of the two grid-sized aggregates.
     # Plan-gated in tests/test_plans.py.
-    cand = _bitext_persist(
-        a.join(b, "cid").select("a_id", "b_id", cos.alias("cosine"))
+    cand = cap_persist(
+        "bitext",
+        a.join(b, "cid").select("a_id", "b_id", cos.alias("cosine")),
     )
     w_a = Window.partitionBy("a_id").orderBy(
         F.col("cosine").desc(), F.col("b_id")

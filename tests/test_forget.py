@@ -162,10 +162,8 @@ def test_ann_forget_plan_and_large_ledger(spark, sf_dir, tmp_path):
     assert "Not(In(nid" in squashed or "NOT(In(nid" in squashed, plan
     small = sorted(tuple(r) for r in lazy.collect())
 
-    import database_anonymiser_minimiser_spark.operators.similarity as sim
-
-    prev = sim._TOMBSTONE_ISIN_CAP
-    sim._TOMBSTONE_ISIN_CAP = 1
+    prev = D._TS_ISIN_CAP
+    D._TS_ISIN_CAP = 1
     try:
         big = sorted(
             tuple(r)
@@ -174,7 +172,7 @@ def test_ann_forget_plan_and_large_ledger(spark, sf_dir, tmp_path):
             ).collect()
         )
     finally:
-        sim._TOMBSTONE_ISIN_CAP = prev
+        D._TS_ISIN_CAP = prev
     assert small == big
 
 

@@ -916,11 +916,12 @@ def test_mutual_top1_pairs_planted(spark):
 
 
 def test_bitext_persists_released_across_calls(spark):
-    """r15 leak fix (VERDICT r14 #5): the bitext candidate persists must
-    be routed through the last-call-released registry — N repeated CLI/
-    notebook calls may strand at most ONE cached relation, and each call
-    releases the previous call's cache."""
+    """The bitext candidate persists are released on the next call:
+    N repeated CLI/notebook calls strand at most ONE cached relation,
+    and each call releases the previous call's cache."""
     from pyspark.sql import types as T
+
+    from database_anonymiser_minimiser_spark import persist as P
 
     schema = T.StructType(
         [
@@ -933,20 +934,20 @@ def test_bitext_persists_released_across_calls(spark):
     cent = [{"cid": 0, "cv": [1.0, 1.0, 1.0, 1.0]}]
 
     spark.catalog.clearCache()
-    S._BITEXT_PERSISTS.clear()
+    P._PERSISTS.pop("bitext", None)
     cm = spark._jsparkSession.sharedState().cacheManager()
     base = cm.cachedData().size()
     for _ in range(3):
         S.mutual_top1_pairs(a, b, cent).collect()
-        assert len(S._BITEXT_PERSISTS) == 1  # at most one call's cache
+        assert "bitext" in P._PERSISTS  # one key, one relation held
         # JVM-side: net cached relations never exceed one call's worth
         # (repeat calls share a canonicalized plan, so the ceiling is 1)
         assert cm.cachedData().size() - base <= 1
-    for _ in range(2):  # the margin sibling shares the registry
+    for _ in range(2):  # the margin sibling shares the key
         S.bitext_margin_pairs(a, b, cent).collect()
-        assert len(S._BITEXT_PERSISTS) == 1
+        assert "bitext" in P._PERSISTS
         assert cm.cachedData().size() - base <= 1
-    S._BITEXT_PERSISTS.clear()
+    P._PERSISTS.pop("bitext", None)
     spark.catalog.clearCache()
 
 

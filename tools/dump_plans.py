@@ -1,6 +1,12 @@
-"""Regenerate PLANS.md: formatted physical plans for the flagship
-queries with the scale property each plan demonstrates. Run from the
-repo root: python tools/dump_plans.py [sf_dir]."""
+"""Dump formatted physical plans. Run from the repo root.
+
+- ``python tools/dump_plans.py [sf_dir]`` regenerates PLANS.md: the
+  flagship queries with the scale property each plan demonstrates.
+- ``python tools/dump_plans.py --round <round> [tag] [query ...]``
+  writes ``plans/<round>/<query>_<tag>.txt`` (tag defaults to
+  ``before``; queries default to that round's list in ``ROUNDS``) over
+  the corpus at ``$SPARK_GRAFT_SF_DIR``. The OPTIMIZATION_<round>.md
+  plan-shape claims cite these files; the committed ones are sf0.1."""
 
 from __future__ import annotations
 
@@ -271,13 +277,60 @@ SHOWCASE = [
 ]
 
 
+# round -> the optimisation targets whose plans that round snapshots
+ROUNDS = {
+    "r14": [
+        "bitext_mutual_top1",
+        "bitext_margin_pairs",
+        "ann_pq_adc_topk",
+        "ann_ivf_pq_topk",
+        "ann_pq_rescore_topk",
+        "ann_screen_delta",
+        "unigram_encode_token_count",
+        "bpe_encode_token_count",
+        "dedup_minhash_incremental",
+        "decontaminate_bloom",
+        "dedup_clusters",
+    ],
+    "r15": [
+        "dedup_ngram_jaccard",
+        "dedup_containment_pairs",
+        "bpe_encode_token_count",
+    ],
+}
+
+
 def plan_of(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
 
 
+def dump_round(rnd: str, tag: str, names: list[str]) -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR")
+    if not sf_dir:
+        sys.exit("--round needs SPARK_GRAFT_SF_DIR (the corpus to plan over)")
+    names = names or ROUNDS[rnd]
+    out_dir = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", rnd
+    )
+    os.makedirs(out_dir, exist_ok=True)
+    spark = get_spark(app_name=f"dbmask-{rnd}-plans")
+    spark.sparkContext.setLogLevel("ERROR")
+    for name in names:
+        plan = plan_of(Q.QUERIES[name](spark, sf_dir))
+        path = os.path.join(out_dir, f"{name}_{tag}.txt")
+        with open(path, "w") as fh:
+            fh.write(plan)
+        print(f"wrote {path} ({plan.count('Exchange')} Exchange refs)")
+    spark.stop()
+
+
 def main() -> None:
+    if sys.argv[1:2] == ["--round"]:
+        rest = sys.argv[3:]
+        dump_round(sys.argv[2], rest[0] if rest else "before", rest[1:])
+        return
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     spark = get_spark(app_name="dbmask-spark-plans", master="local[4]",
                       shuffle_partitions=4)
